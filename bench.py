@@ -62,11 +62,11 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # explodes, map-side partial aggregates, Arrow kernels) runs on a single
 # core no matter how many are available.  Two remedies were measured at
 # sf0.1/local[32]:
-#   - per-query repartition after read (registry._fanout, the
-#     SPARK_GRAFT_SCAN_FANOUT knob): fixes the scan-bound queries
-#     (corr_matrix 5.9->1.3 s) but taxes every scan-light query with a
-#     full-table shuffle (ticks_events 0.4->4.3 s) — net LOSS over the
-#     149-query surface (200->218 s);
+#   - per-query repartition after read (the former opt-in
+#     SPARK_GRAFT_SCAN_FANOUT knob, since removed as a measured loss):
+#     fixes the scan-bound queries (corr_matrix 5.9->1.3 s) but taxes
+#     every scan-light query with a full-table shuffle (ticks_events
+#     0.4->4.3 s) — net LOSS over the 149-query surface (200->218 s);
 #   - repack the input once into a 32-row-group layout and lower
 #     files.openCostInBytes so Spark's bin-packing actually splits the
 #     small files: the same scan-bound wins (corr_matrix 6.0->1.3 s,

@@ -601,7 +601,7 @@ def _record_cc_stats(
 
 def _cc_label_propagation(
     sym: DataFrame, max_iterations: int, check_every: int,
-    cycler: Optional[LocalCheckpointCycler] = None,
+    cycler: LocalCheckpointCycler,
 ) -> DataFrame:
     """Min-label propagation over persisted symmetric edges ``sym``
     (columns ``src``, ``dst``, hash-partitioned on ``src`` by the
@@ -630,11 +630,12 @@ def _cc_label_propagation(
     d = 2, paid 2 batch jobs where 1 suffices).  Batch jobs are now
     exactly ``ceil((d + 1) / check_every)`` and total steps unchanged.
 
-    Convergence is read from an :class:`~pyspark.sql.Observation` bound
-    to the batch's checkpoint materialization job — the former separate
-    ``count()`` action per batch re-scanned the checkpointed labels
-    (verified: eager ``localCheckpoint`` fulfills observe metrics; the
-    one-job-per-batch shape is pinned by test).
+    Convergence is read off the batch's checkpoint materialization job
+    (``cycler.observed_checkpoint``) — the former separate ``count()``
+    action per batch re-scanned the checkpointed labels (the
+    one-job-per-batch shape is pinned by test).  No validity check is
+    needed: a retry can only over-count ``changed``, which can only
+    delay the exit by a batch, never end the loop before the fixpoint.
 
     Each batch ends in ``localCheckpoint(eager=True)``: iterative plans
     reference the previous state 2× per step, so without lineage
@@ -647,11 +648,6 @@ def _cc_label_propagation(
     one-per-round.  The seed labels are NOT checkpointed: distinct
     ``src`` over the pre-partitioned ``sym`` is exchange-free and folds
     into batch 1's single materialization job."""
-    from pyspark.sql import Observation
-
-    ck = cycler.checkpoint if cycler is not None else (
-        lambda df: df.localCheckpoint(eager=True)
-    )
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -666,8 +662,8 @@ def _cc_label_propagation(
         stepped = labels.withColumn("__old", F.col("label"))
         for i in range(batch):
             if i == batch - 1 and batch > 1:
-                # re-stamp the reference labels so the Observation
-                # counts only the LAST step's changes (docstring)
+                # re-stamp the reference labels so the observed count
+                # covers only the LAST step's changes (docstring)
                 stepped = stepped.select(
                     "id", "label", F.col("label").alias("__old")
                 )
@@ -683,19 +679,12 @@ def _cc_label_propagation(
                 .groupBy("id")
                 .agg(F.min("label").alias("label"), F.max("__old").alias("__old"))
             )
-        obs = Observation()
-        stepped = ck(
-            stepped.observe(
-                obs,
-                F.count(F.when(F.col("label") < F.col("__old"), 1)).alias(
-                    "changed"
-                ),
-            )
+        labels, seen = cycler.observed_checkpoint(
+            stepped,
+            [F.count(F.when(F.col("label") < F.col("__old"), 1)).alias("changed")],
         )
-        changed = obs.get["changed"]
-        labels = stepped
         steps_done += batch
-        if changed == 0:
+        if seen["changed"] == 0:
             _record_cc_stats("label", steps_done, max_iterations)
             return labels.select("id", F.col("label").alias("cluster_id"))
     _record_cc_stats("label", max_iterations, max_iterations, converged=False)
@@ -707,8 +696,7 @@ def _cc_label_propagation(
 
 
 def _cc_star(
-    sym: DataFrame, max_iterations: int,
-    cycler: Optional[LocalCheckpointCycler] = None,
+    sym: DataFrame, max_iterations: int, cycler: LocalCheckpointCycler
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond").  Converges in
@@ -728,9 +716,7 @@ def _cc_star(
     # previous round's work set s_{r-1} — two generations back at that
     # moment — so the newest THREE generations must stay live; freeing
     # at lag 3 only ever drops lg_{r-1} / s_{r-2}, both dead by then
-    ck = cycler.checkpoint if cycler is not None else (
-        lambda df: df.localCheckpoint(eager=True)
-    )
+    ck = cycler.checkpoint
     # high→low orientation; drop self-loops
     work = ck(
         sym.where(F.col("src") != F.col("dst"))

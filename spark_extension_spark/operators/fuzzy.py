@@ -113,9 +113,11 @@ def _string_pairs(
     # fixed overhead of a cluster-wide fan-out, with no silent
     # data-dependent shape switch.  Default: the session's shuffle
     # partitions (scale-adaptive).
+    if variant_partitions is not None and variant_partitions < 1:
+        raise ValueError(f"variant_partitions must be >= 1, got {variant_partitions}")
     n_parts = (
         int(variant_partitions)
-        if variant_partitions
+        if variant_partitions is not None
         else session_shuffle_partitions(left_strings.sparkSession)
     )
     lv = left_strings.repartition(n_parts).select(

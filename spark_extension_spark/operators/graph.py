@@ -10,11 +10,21 @@ Execution shape per iteration (the thing that must hold at 10^10
 edges): ONE equi-join (ranks onto edges, keyed by source) + ONE
 aggregate (contributions keyed by destination) + a 1-row broadcast
 (dangling mass).  No driver-side collection of anything wider than the
-dangling-mass scalar; iteration state is ``localCheckpoint``-ed every
-round by default — each round references the previous state 2-3 times,
-so any sparser cadence recomputes b^c rounds of work between
+dangling-mass scalar; iteration state is ``localCheckpoint``-ed after
+every round but the last.  Each round references the previous state
+2-3 times, so any sparser cadence recomputes b^c rounds of work between
 checkpoints (measured 87 s -> 7 s on the sf0.1 k-core gate going from
-every-4 to every-1).
+every-4 to every-1), which is why the cadence is not an option.
+
+Metrics observed on a checkpoint job (pagerank's dangling mass,
+k_core's exit count and hash) come from
+:meth:`~spark_extension_spark.utils.LocalCheckpointCycler.observed_checkpoint`.
+Observed metrics can over-count when tasks are retried, so each loop
+states what a correct reading satisfies (pagerank: the row count equals
+the node count; k_core: the edge count never rises).  One failed
+reading distrusts every later one, and the loop falls back to its
+in-plan path (pagerank's broadcast dangling mass) or to the full round
+count (k_core).  Results never depend on whether a reading was trusted.
 
 Determinism: per-destination contribution sums and the dangling mass
 run in DECIMAL(38,20) — order-independent, so ranks are bit-identical
@@ -47,7 +57,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 1,
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """PageRank over a directed edge list: (``id``, ``rank``) after
@@ -60,6 +69,15 @@ def pagerank(
     result a pure deterministic function of the input — reproducible,
     auditable, and exactly replicable in SQL; 10–20 iterations is the
     standard operating range for ranking purposes.
+
+    Every round but the last ends in a checkpoint whose job also
+    observes the dangling mass, the row count and ``max(__n)``; the
+    next round then takes the mass as a literal instead of a 1-row
+    broadcast aggregate.  The reading is trusted only while the row
+    count equals the node count N (a retried task counted twice raises
+    it); once a reading fails, every later round uses the in-plan
+    broadcast, as round 0 does.  Both paths compute the same
+    order-independent decimal sum, so ranks are bit-identical.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -105,20 +123,22 @@ def pagerank(
     # storage stays at one generation across any iteration count; the
     # final generation backs the returned DataFrame and is left live
     cycler = LocalCheckpointCycler(e.sparkSession, lag=1)
-    from pyspark.sql import Observation
+    # the dangling mass of the previous ranks: in-plan as a 1-row
+    # broadcast, or observed on the previous round's checkpoint job
+    dang_mass = F.coalesce(
+        F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).cast("decimal(38,20)")).cast(
+            "double"
+        ),
+        F.lit(0.0),
+    ).alias("__dang")
+    observed = [dang_mass, F.count(F.lit(1)).alias("__rows"), F.max("__n").alias("__n")]
 
-    # The dangling mass is a 1-row aggregate over the PREVIOUS ranks.
-    # When the previous round ended in a checkpoint, that exact sum is
-    # folded into the checkpoint's Observation (the k_core pattern) and
-    # arrives here as a plain Python double — the dangling subtree
-    # (filter + decimal aggregate + broadcast build) then vanishes from
-    # this round's plan entirely.  The observed expression is the SAME
-    # order-independent decimal(38,20) sum cast to double inside the
-    # JVM, so the literal is bit-identical to what the broadcast row
-    # carried.  Rounds whose predecessor did not checkpoint (sparser
-    # checkpoint cadences, and round 0 over the un-materialized seed)
-    # keep the in-plan broadcast path.
-    observed_dang = None
+    def every_node_once(m, _prev):
+        # a retry that counts a partition twice raises the row count;
+        # max(__n) is idempotent and the node set never changes
+        return m["__rows"] == m["__n"]
+
+    dang = None
     for i in range(int(iterations)):
         contrib = (
             e.join(ranks.select("id", "out_deg", "rank"), e["src"] == F.col("id"))
@@ -127,16 +147,10 @@ def pagerank(
             .agg(F.sum(F.col("__c").cast("decimal(38,20)")).cast("double").alias("__in"))
         )
         stepped = ranks.join(contrib, ranks["id"] == contrib["dst"], "left")
-        if observed_dang is not None:
-            dang_col = F.lit(float(observed_dang))
+        if dang is not None:
+            dang_col = F.lit(dang["__dang"])
         else:
-            dangling = ranks.where(F.col("out_deg") == 0).agg(
-                F.coalesce(
-                    F.sum(F.col("rank").cast("decimal(38,20)")).cast("double"),
-                    F.lit(0.0),
-                ).alias("__dang")
-            )
-            stepped = stepped.crossJoin(F.broadcast(dangling))
+            stepped = stepped.crossJoin(F.broadcast(ranks.agg(dang_mass)))
             dang_col = F.col("__dang")
         ranks = stepped.select(
             "id",
@@ -148,23 +162,8 @@ def pagerank(
             ).alias("rank"),
             "__n",
         )
-        observed_dang = None
-        if checkpoint_every and (i + 1) % int(checkpoint_every) == 0 and i + 1 < iterations:
-            obs = Observation()
-            ranks = cycler.checkpoint(
-                ranks.observe(
-                    obs,
-                    F.coalesce(
-                        F.sum(
-                            F.when(F.col("out_deg") == 0, F.col("rank")).cast(
-                                "decimal(38,20)"
-                            )
-                        ).cast("double"),
-                        F.lit(0.0),
-                    ).alias("__dang"),
-                )
-            )
-            observed_dang = obs.get["__dang"]
+        if i + 1 < iterations:
+            ranks, dang = cycler.observed_checkpoint(ranks, observed, every_node_once)
 
     # the last live generation backs the returned ranks' lineage and
     # cannot be freed here; the caller's handle frees it when done
@@ -336,34 +335,12 @@ def degrees_from_canonical(und: DataFrame) -> DataFrame:
     return ends.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("degree"))
 
 
-def _kcore_exit_metrics():
-    """The early-exit guard metrics k_core folds into each checkpoint's
-    Observation: the surviving edge count plus an order-independent
-    edge-set hash-sum (a retried, metric-inflated count cannot also
-    reproduce the previous SET's hash aggregate).  Module-level seam so
-    the guard's isolated cost can be A/B-measured."""
-    return [
-        F.count(F.lit(1)).alias("n"),
-        # bit_xor: order-independent like the former decimal(20,0)
-        # hash-SUM but pure int64 — no decimal path and no overflow at
-        # ANY edge count (the sum form's ANSI bound was ~10^10 edges).
-        # XOR cancels duplicated rows, but the exit also requires the
-        # COUNT to match and the monotonicity tripwire distrusts any
-        # count rise, so a retry-inflated observation still cannot pass.
-        # A/B-measured (5 interleaved clean-steal rounds): the guard —
-        # either form — costs nothing over a count-only exit; the r12
-        # floor delta (1.04 -> 1.29 s) was host drift, not the guard.
-        F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))).alias("h"),
-    ]
-
-
 def k_core(
     edges: DataFrame,
     k: int,
     rounds: int = 10,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """Nodes of the ``k``-core (the maximal subgraph where every node
@@ -384,25 +361,23 @@ def k_core(
     (a path graph peels one node per pass) need more rounds; raise
     ``rounds`` when the survivor count hasn't stabilized.
 
-    Lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_every`` passes — the iterative-plan guard shared
-    with :func:`pagerank` and connected components.  Peeling is
-    monotone (passes only REMOVE edges), so a pass that leaves the
-    edge COUNT unchanged left the edge SET unchanged and every further
-    pass is a provable no-op: the loop exits early then, with a result
-    identical to running all ``rounds`` (and to :func:`k_core_sql`'s
-    full unroll).  The count — plus an order-independent edge hash-sum
-    and a monotonicity tripwire that guard the exit against
-    observed-metric inflation under cluster task retries (see the loop
-    comment) — rides an :class:`~pyspark.sql.Observation` on the
-    checkpoint job the loop already pays, so early exit costs zero
-    extra actions.  Pass an ``unpersist_handle`` to free the last
-    checkpoint generation when done with the result (it backs the
-    returned frame's lineage, so it stays live until then; without a
-    handle it falls to GC).
+    The canonical edge set and every pass but the last end in a
+    ``localCheckpoint`` (the lineage guard shared with :func:`pagerank`
+    and connected components).  Peeling is monotone (passes only REMOVE
+    edges), so a pass that leaves the edge COUNT unchanged left the
+    edge SET unchanged and every further pass is a provable no-op: the
+    loop exits early then, with a result identical to running all
+    ``rounds`` (and to :func:`k_core_sql`'s full unroll).  The count
+    and an order-independent edge-set hash ride the checkpoint job's
+    Observation, so early exit costs zero extra actions.  Observed
+    counts can only be trusted while they never rise: a rise proves a
+    retried task was counted twice, and from then on the loop ignores
+    every reading and runs all ``rounds`` (still exact, just no early
+    exit).  Pass an ``unpersist_handle`` to free the last checkpoint
+    generation when done with the result (it backs the returned
+    frame's lineage, so it stays live until then; without a handle it
+    falls to GC).
     """
-    from pyspark.sql import Observation
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
@@ -411,30 +386,25 @@ def k_core(
     # lag-1 cycling: each pass reads only the previous edge set, so the
     # superseded checkpoint is freed as soon as the next one lands
     cycler = LocalCheckpointCycler(edges.sparkSession, lag=1)
-    # The early exit reads (count, xxhash64-sum) of the surviving edge
-    # set from an Observation.  Observed metrics can OVER-count when
-    # stages/tasks retry on a real cluster, so the exit is guarded two
-    # ways: (a) peeling is monotone, so an observed count ABOVE the
-    # previous reading proves inflation — the tripwire distrusts every
-    # later reading and falls back to the fixed round count (still
-    # exact, just no early exit); (b) a retry that inflates the count
-    # back to a coincidental match would also have to reproduce the
-    # order-independent hash-sum of the previous edge SET.  In local
-    # mode (exactly-once observation) count-equality alone is already
-    # a theorem-backed fixed-point proof; the extra guard costs two
-    # aggregate expressions on a job the loop pays anyway.
-    _exit_metrics = _kcore_exit_metrics()
-    prev = None
-    metrics_trusted = True
-    if checkpoint_every:
-        # checkpoint the canonical edge set BEFORE the loop: pass 0
-        # consumes it three times (two degree projections + the
-        # semi-join base), and un-truncated each consumer re-runs the
-        # distinct-union over the source — the sibling iteratives
-        # (pagerank, LPA) pin their base frames the same way
-        obs0 = Observation()
-        cur = cycler.checkpoint(cur.observe(obs0, *_exit_metrics))
-        prev = (obs0.get["n"], obs0.get["h"])
+    # The exit needs (count, hash) equal to the previous trusted
+    # reading: a retry that inflates the count back to a coincidental
+    # match would also have to reproduce the previous SET's hash.
+    # bit_xor is order-independent like a hash-sum but pure int64, so
+    # it cannot overflow at any edge count; XOR cancels duplicated rows,
+    # which is why the count must match too.
+    exit_metrics = [
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))).alias("h"),
+    ]
+
+    def shrinking(m, prev):
+        return prev is None or m["n"] <= prev["n"]
+
+    # checkpoint the canonical edge set BEFORE the loop: pass 0 consumes
+    # it three times (two degree projections + the semi-join base), and
+    # un-truncated each consumer re-runs the distinct-union over the
+    # source
+    cur, prev = cycler.observed_checkpoint(cur, exit_metrics, shrinking)
     for r in range(int(rounds)):
         deg = degrees_from_canonical(cur)
         keep = deg.where(F.col("degree") >= int(k)).select("id")
@@ -442,15 +412,11 @@ def k_core(
             cur.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
         )
-        if checkpoint_every and (r + 1) % int(checkpoint_every) == 0 and r + 1 < rounds:
-            obs = Observation()
-            cur = cycler.checkpoint(cur.observe(obs, *_exit_metrics))
-            n_h = (obs.get["n"], obs.get["h"])
-            if prev is not None and n_h[0] > prev[0]:
-                metrics_trusted = False  # retry inflation: counts rose
-            if metrics_trusted and n_h == prev:
+        if r + 1 < rounds:
+            cur, m = cycler.observed_checkpoint(cur, exit_metrics, shrinking)
+            if m is not None and m == prev:
                 break  # fixed point: every remaining pass is a no-op
-            prev = n_h
+            prev = m
     # the last live generation backs the returned frame's lineage and
     # cannot be freed here; the caller's handle frees it when done
     if unpersist_handle is not None:
@@ -500,7 +466,6 @@ def label_propagation(
     iterations: int = 5,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
@@ -531,8 +496,8 @@ def label_propagation(
     ``min(struct(-count, label))`` is the identical argmax — count
     desc, label asc on ties — as a plain aggregate, for any orderable
     id type).  State is
-    ``localCheckpoint``-ed every ``checkpoint_every`` rounds to
-    truncate lineage.  The canonical edge list is persisted (it feeds
+    ``localCheckpoint``-ed after every round but the last to truncate
+    lineage.  The canonical edge list is persisted (it feeds
     every round); pass an ``unpersist_handle`` to release it.
     """
     if iterations < 1:
@@ -578,7 +543,7 @@ def label_propagation(
             )
             .select("id", F.col("__b.label").alias("label"))
         )
-        if checkpoint_every and (i + 1) % int(checkpoint_every) == 0 and i + 1 < iterations:
+        if i + 1 < iterations:
             labels = cycler.checkpoint(labels)
 
     # the last live generation backs the returned labels' lineage and

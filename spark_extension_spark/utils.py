@@ -10,9 +10,9 @@ Parity targets (see SURVEY.md §2.10/§2.13):
 from __future__ import annotations
 
 import re
-from typing import Iterable, List, Optional, Sequence
+from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -234,6 +234,10 @@ class LocalCheckpointCycler:
     checkpoint call, which assumes the driver is not concurrently
     persisting RDDs on another thread during the loop — true for every
     operator here (single-threaded driver iteration).
+
+    ``observed_checkpoint`` is the one place a loop reads metrics off
+    its state: the eager checkpoint job fulfils an ``Observation`` with
+    no extra action, and the caller's check decides whether to trust it.
     """
 
     def __init__(self, spark: SparkSession, lag: int = 1) -> None:
@@ -247,6 +251,8 @@ class LocalCheckpointCycler:
         self._jsc = spark.sparkContext._jsc
         self._live: list = []  # oldest first, at most `lag` generations
         self._lag = int(lag)
+        self._trusted = True
+        self._last_trusted: Optional[Dict] = None
 
     def _persistent_ids(self) -> set:
         return {int(k) for k in self._jsc.getPersistentRDDs().keySet().toArray()}
@@ -267,6 +273,36 @@ class LocalCheckpointCycler:
         if len(self._live) > self._lag:
             self._free(self._live.pop(0))
         return ck
+
+    def observed_checkpoint(
+        self,
+        df: DataFrame,
+        metrics: Sequence[Column],
+        valid: Optional[Callable[[Dict, Optional[Dict]], bool]] = None,
+    ) -> Tuple[DataFrame, Optional[Dict]]:
+        """Checkpoint ``df`` like :meth:`checkpoint`, reading the
+        aggregate ``metrics`` (aliased columns) off the same job through
+        an ``Observation``.  Returns ``(checkpointed frame, {alias:
+        value})``, or ``(frame, None)`` when the reading is not trusted.
+
+        ``valid(current, previous_trusted)`` is the caller's invariant
+        (``previous_trusted`` is ``None`` on the first reading): a retry
+        can count a partition twice, so a loop whose metric feeds a
+        decision or a value states what a correct reading must satisfy.
+        Distrust is sticky: after one reading fails ``valid``, every
+        later call returns ``None`` (and observes nothing), so a loop
+        falls back to its in-plan path for the rest of its run rather
+        than alternate between trusted and untrusted readings."""
+        if not self._trusted:
+            return self.checkpoint(df), None
+        obs = Observation()
+        ck = self.checkpoint(df.observe(obs, *metrics))
+        got = obs.get
+        if valid is not None and not valid(got, self._last_trusted):
+            self._trusted = False
+            return ck, None
+        self._last_trusted = got
+        return ck, got
 
     def release(self) -> None:
         """Free every still-live generation (see class docstring for when)."""

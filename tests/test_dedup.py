@@ -722,22 +722,77 @@ def test_pagerank_dangling_mass_redistributed(spark):
     assert abs(sum(pr.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_observed_dangling_matches_inplan(spark):
-    # round-13: with checkpoint_every=1 the dangling mass rides each
-    # checkpoint's Observation and enters the next round as a literal;
-    # with sparser cadences the in-plan broadcast path is used for
-    # rounds whose predecessor did not checkpoint, and with
-    # checkpoint_every=0 it is used everywhere.  All cadences must be
-    # bit-identical (the observed literal IS the broadcast value).
-    from spark_extension_spark.operators.graph import pagerank
+def test_inflated_observations_fall_back_bit_identical(spark, monkeypatch):
+    # Observed metrics over-count when a retried task is counted twice.
+    # Every metric read off a checkpoint is inflated here — counts and
+    # sums by a factor that grows with each read, so a fixed point also
+    # looks like a rise; pagerank's max(__n) is idempotent under retries
+    # and stays exact.  Each loop must detect the inflation (or, for
+    # connected components, be unable to exit early on it) and return
+    # exactly what an unfaulted run returns.  The unfaulted pagerank
+    # takes the observed dangling mass, the faulted one the in-plan
+    # broadcast, so this also pins the two paths bit for bit.
+    from pyspark.sql import Observation
 
-    edges = spark.createDataFrame(
-        [(i, (i * 3) % 11) for i in range(30)] + [(11, 12)], ["src", "dst"]
+    from spark_extension_spark.operators.dedup import near_dup_clusters
+    from spark_extension_spark.operators.graph import k_core, pagerank
+    from spark_extension_spark.utils import LocalCheckpointCycler
+
+    # node 99 has no out-edges, so the dangling mass is not zero
+    pr_edges = spark.createDataFrame(
+        [(i, (i * 3) % 11) for i in range(30)] + [(11, 99)], ["src", "dst"]
     )
-    a = sorted(map(tuple, pagerank(edges, iterations=5, checkpoint_every=1).collect()))
-    b = sorted(map(tuple, pagerank(edges, iterations=5, checkpoint_every=2).collect()))
-    c = sorted(map(tuple, pagerank(edges, iterations=5, checkpoint_every=0).collect()))
-    assert a == b == c
+    # a 5-clique with a 3-node tail: the 2-core peels one tail node per
+    # pass, so an unfaulted run reaches its fixed point after 4 passes
+    kc_edges = spark.createDataFrame(
+        [(a, b) for a in range(5) for b in range(a + 1, 5)] + [(4, 5), (5, 6), (6, 7)],
+        ["src", "dst"],
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)], ["id_a", "id_b"]
+    )
+    rounds = 8
+    checkpoints = []
+    real_checkpoint = LocalCheckpointCycler.checkpoint
+
+    def counted(self, df):
+        checkpoints.append(1)
+        return real_checkpoint(self, df)
+
+    monkeypatch.setattr(LocalCheckpointCycler, "checkpoint", counted)
+
+    def run():
+        pr = pagerank(pr_edges, iterations=5)
+        del checkpoints[:]
+        kc = sorted(map(tuple, k_core(kc_edges, k=2, rounds=rounds).collect()))
+        kc_checkpoints = len(checkpoints)
+        cc = sorted(map(tuple, near_dup_clusters(pairs, warn_single_use=False).collect()))
+        return pr, sorted(map(tuple, pr.collect())), kc, kc_checkpoints, cc
+
+    pr_plan, pr_want, kc_want, kc_ck_want, cc_want = run()
+
+    reads = []
+    real_get = Observation.get.fget
+
+    def inflated(self):
+        reads.append(1)
+        f = len(reads) + 1
+        return {k: v if k == "__n" else v * f for k, v in real_get(self).items()}
+
+    monkeypatch.setattr(Observation, "get", property(inflated))
+    pr_fault, pr_got, kc_got, kc_ck_got, cc_got = run()
+
+    assert reads, "no observed metric was read"
+    assert pr_got == pr_want
+    assert kc_got == kc_want
+    assert cc_got == cc_want
+    # pagerank's last round took the in-plan broadcast, not a literal
+    assert "__dang" not in pr_plan._jdf.queryExecution().analyzed().toString()
+    assert "__dang" in pr_fault._jdf.queryExecution().analyzed().toString()
+    # k_core exits early unfaulted, and runs every round once distrusted
+    # (the canonical edges plus every pass but the last)
+    assert kc_ck_want < rounds
+    assert kc_ck_got == rounds
 
 
 def test_pagerank_partitioning_independent(spark):

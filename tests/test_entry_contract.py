@@ -96,24 +96,20 @@ def test_gate_outputs_are_scalar_typed(spark):
     assert not offenders, f"non-scalar gate outputs: {offenders}"
 
 
-def test_scan_fanout_policy(spark, monkeypatch):
-    # opt-in only: without the env var, load() adds no repartition (the
-    # plan-shape pins depend on this); with it, tables above the size
-    # threshold scatter to the default parallelism and values are
-    # unchanged (partitioning-independence is the EXACTNESS contract)
-    from spark_extension_spark.registry import load
+def test_observations_built_only_in_utils():
+    # every metric read off a loop's checkpoint goes through
+    # LocalCheckpointCycler.observed_checkpoint, which applies the
+    # caller's validity check and sticky distrust; an Observation built
+    # anywhere else would bypass that trust rule
+    import re
 
-    sf = "/root/testdata/sf0.01"
-    monkeypatch.delenv("SPARK_GRAFT_SCAN_FANOUT", raising=False)
-    base = load(spark, sf, "lineitem")
-    base_parts = base.rdd.getNumPartitions()
-
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "1")
-    fan = load(spark, sf, "lineitem")  # 1.0 MB: above threshold
-    assert fan.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    tiny = load(spark, sf, "region")   # 2 KB: below threshold, untouched
-    assert tiny.rdd.getNumPartitions() <= base_parts + 1
-
-    a = sorted(map(tuple, base.groupBy("l_returnflag").count().collect()))
-    b = sorted(map(tuple, fan.groupBy("l_returnflag").count().collect()))
-    assert a == b
+    pkg = Path(__file__).resolve().parents[1] / "spark_extension_spark"
+    built = re.compile(r"\bObservation\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "utils.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if built.search(line)
+    ]
+    assert not offenders, f"Observation constructed outside utils.py: {offenders}"

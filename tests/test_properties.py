@@ -188,6 +188,26 @@ def test_fuzzy_join_hint_paths_agree_and_typos_rejected(spark):
         fuzzy_join_levenshtein(df, df, "s", "s", 1, join_hint="shuffle")
 
 
+def test_fuzzy_variant_partitions_rejects_below_one(spark):
+    # 0 used to fall through a truthiness test to the session default,
+    # and -1 reached repartition(); both are caller errors
+    import pytest
+
+    from spark_extension_spark.operators.fuzzy import (
+        fuzzy_dedup_pairs,
+        fuzzy_join_levenshtein,
+    )
+
+    df = spark.createDataFrame([(1, "abc"), (2, "abd")], "id int, s string")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="variant_partitions"):
+            fuzzy_dedup_pairs(df, "id", "s", 1, variant_partitions=bad)
+        with pytest.raises(ValueError, match="variant_partitions"):
+            fuzzy_join_levenshtein(df, df, "s", "s", 1, variant_partitions=bad)
+    got = fuzzy_dedup_pairs(df, "id", "s", 1, variant_partitions=1).collect()
+    assert [(r["id_a"], r["id_b"], r["distance"]) for r in got] == [(1, 2, 1)]
+
+
 @given(values=st.lists(st.integers(min_value=0, max_value=30), max_size=40))
 @SETTINGS
 def test_kmv_exact_below_capacity(spark, values):

@@ -228,6 +228,31 @@ def test_local_checkpoint_cycler_lag_window(spark):
     cyc.release()
 
 
+def test_observed_checkpoint_distrust_is_sticky(spark):
+    from pyspark.sql import functions as F
+
+    from spark_extension_spark.utils import LocalCheckpointCycler
+
+    cyc = LocalCheckpointCycler(spark, lag=1)
+    seen = []
+
+    def shrinking(m, prev):
+        seen.append(prev)
+        return prev is None or m["n"] <= prev["n"]
+
+    metrics = [F.count(F.lit(1)).alias("n")]
+    readings = []
+    for size in (10, 8, 9, 5):
+        df, m = cyc.observed_checkpoint(spark.range(size), metrics, shrinking)
+        assert df.count() == size  # checkpointed either way
+        readings.append(m)
+    # 9 > 8 fails the check; the later, valid-looking 5 is not trusted
+    assert readings == [{"n": 10}, {"n": 8}, None, None]
+    # the check saw the previous TRUSTED reading, and was not asked again
+    assert seen == [None, {"n": 10}, {"n": 8}]
+    cyc.release()
+
+
 def _write_trivial_wheel(dirpath, name="sx_wheeltest", version="1.0"):
     """Hand-assemble a minimal no-dependency wheel (a wheel is a zip
     with package files + dist-info) so the install path is testable
