@@ -41,7 +41,7 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils import LocalCheckpointCycler
+from ..utils import LocalCheckpointCycler, LoopSession
 from .text import normalize_text
 
 __all__ = [
@@ -370,8 +370,9 @@ def bpe_train(
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     spark = df.sparkSession
+    loop = LoopSession(df)
     vocab = (
-        word_counts(df, text_col)
+        word_counts(loop.adopt(df), text_col)
         .select(_spaced(F.col("word")).alias("spaced"), "cnt")
         .persist()
     )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..utils import (
     LocalCheckpointCycler,
+    LoopSession,
     UnpersistHandle,
     session_shuffle_partitions,
 )
@@ -611,13 +612,15 @@ def _cc_label_propagation(
     Step shape (round 11): neighbour contributions and the node's own
     state meet in ONE union + min-aggregate keyed by node id — the
     former join-back of the neighbour minima onto the label frame was a
-    second edge-adjacent exchange per step.  The label state arrives at
-    each step's join hash-partitioned on ``id`` from the previous
-    aggregate, and ``sym`` is pre-partitioned on ``src``, so the
-    labels-onto-edges join itself moves nothing: ONE exchange per step
-    (the union aggregate).  The reference labels (``__old``) ride the
-    aggregate as ``max`` over a column only the self branch populates —
-    exactly one non-null per id.
+    second edge-adjacent exchange per step.  Within a batch the label
+    state arrives at each step's join hash-partitioned on ``id`` from
+    the previous aggregate, and ``sym`` is pre-partitioned on ``src`` at
+    the same width, so the labels-onto-edges join itself moves nothing:
+    ONE exchange per step (the union aggregate), plus a node-sized
+    re-hash of the checkpointed labels on each batch's first step.  The
+    reference labels (``__old``) ride the aggregate as ``max`` over a
+    column only the self branch populates — exactly one non-null per
+    id.
 
     Convergence is judged on the batch's LAST step alone (round 13):
     ``__old`` is re-stamped to the second-to-last state's labels, so
@@ -862,13 +865,16 @@ def connected_components(
     # the edge dedup rides the src repartition: hash(src) collocates
     # every (src, dst) group, so dropDuplicates fuses onto that one
     # exchange — the former distinct()-then-repartition paid TWO full
-    # edge-list exchanges in this cache build (round 13; note the win
-    # is build-side only — a cached plan's output partitioning is
-    # opaque to consumers under AQE, so the loop's per-batch join
-    # re-shuffles the cached edges either way, once per batch via AQE
-    # stage reuse across the composed steps)
+    # edge-list exchanges in this cache build.  The executed plans show
+    # the cache keeping hash(src) at the loop width into every step's
+    # join, so no step re-shuffles the cached edges (AQE broadcasts them
+    # instead when they are small).  A step's exchanges are its union
+    # aggregate's and, on a batch's first step only, the checkpointed
+    # labels': a localCheckpoint reports unknown partitioning, so they
+    # are re-hashed into the join.
+    loop = LoopSession(edges)
     sym = (
-        edges.select(both_dirs.alias("__e"))
+        loop.adopt(edges).select(both_dirs.alias("__e"))
         .select("__e.src", "__e.dst")
         .repartition("src")
         .dropDuplicates(["src", "dst"])
@@ -897,7 +903,7 @@ def connected_components(
             unpersist_handle.add_dataframe(out)
         out.count()
         ok = True
-        return out
+        return loop.export(out)
     finally:
         sym.unpersist()
         if cycler is not None:

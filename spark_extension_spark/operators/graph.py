@@ -15,6 +15,8 @@ every round but the last.  Each round references the previous state
 2-3 times, so any sparser cadence recomputes b^c rounds of work between
 checkpoints (measured 87 s -> 7 s on the sf0.1 k-core gate going from
 every-4 to every-1), which is why the cadence is not an option.
+Every loop here runs at the width its input needs
+(:class:`~spark_extension_spark.utils.LoopSession`).
 
 Metrics observed on a checkpoint job (pagerank's dangling mass,
 k_core's exit count and hash) come from
@@ -39,7 +41,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..utils import LocalCheckpointCycler, UnpersistHandle
+from ..utils import LocalCheckpointCycler, LoopSession, UnpersistHandle
 
 __all__ = ["pagerank", "out_degrees", "undirected_edges", "degrees", "triangle_counts", "k_core", "label_propagation", "label_propagation_sql"]
 
@@ -85,6 +87,8 @@ def pagerank(
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     d = float(damping)
 
+    loop = LoopSession(edges)
+    edges = loop.adopt(edges)
     # hash-partitioned on src ONCE: every iteration joins ranks onto the
     # edges by src, and the out-degree count groups by src — with the
     # scan's arbitrary layout both reshuffled the full edge list every
@@ -169,7 +173,7 @@ def pagerank(
     # cannot be freed here; the caller's handle frees it when done
     if unpersist_handle is not None:
         unpersist_handle.add_callback(cycler.release)
-    return ranks.select("id", "rank")
+    return loop.export(ranks.select("id", "rank"))
 
 
 def pagerank_sql(
@@ -382,6 +386,8 @@ def k_core(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
+    loop = LoopSession(edges)
+    edges = loop.adopt(edges)
     cur = undirected_edges(edges, src, dst)
     # lag-1 cycling: each pass reads only the previous edge set, so the
     # superseded checkpoint is freed as soon as the next one lands
@@ -421,7 +427,7 @@ def k_core(
     # cannot be freed here; the caller's handle frees it when done
     if unpersist_handle is not None:
         unpersist_handle.add_callback(cycler.release)
-    return degrees_from_canonical(cur).where(F.col("degree") >= int(k))
+    return loop.export(degrees_from_canonical(cur).where(F.col("degree") >= int(k)))
 
 
 def k_core_sql(edges_subquery: str, k: int, rounds: int = 10) -> str:
@@ -503,6 +509,8 @@ def label_propagation(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
 
+    loop = LoopSession(edges)
+    edges = loop.adopt(edges)
     und = undirected_edges(edges, src, dst)
     # hash-partition the round-invariant edge list on the join key ONCE
     # (the union output is otherwise partitioned by its inputs' layout,
@@ -550,7 +558,7 @@ def label_propagation(
     # cannot be freed here; the caller's handle frees it when done
     if unpersist_handle is not None:
         unpersist_handle.add_callback(cycler.release)
-    return labels
+    return loop.export(labels)
 
 
 def label_propagation_sql(edges_subquery: str, iterations: int = 5) -> str:

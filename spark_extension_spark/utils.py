@@ -23,6 +23,7 @@ __all__ = [
     "SilentUnpersistHandle",
     "NoopUnpersistHandle",
     "LocalCheckpointCycler",
+    "LoopSession",
     "safe_union",
     "session_shuffle_partitions",
 ]
@@ -230,10 +231,12 @@ class LocalCheckpointCycler:
     call it only once every consumer of the last checkpoint has
     materialized (e.g. after persisting and forcing the loop's result).
 
-    Id tracking diffs ``JavaSparkContext.getPersistentRDDs`` around the
-    checkpoint call, which assumes the driver is not concurrently
-    persisting RDDs on another thread during the loop — true for every
-    operator here (single-threaded driver iteration).
+    A generation is the checkpoint's own RDD, read off the returned
+    frame's plan.  Nothing else is ever freed: neither a cache that the
+    checkpoint job happened to materialize first, nor anything another
+    driver thread persists meanwhile, so loops can run on several
+    threads at once.  Each cycler still belongs to one loop on one
+    thread.
 
     ``observed_checkpoint`` is the one place a loop reads metrics off
     its state: the eager checkpoint job fulfils an ``Observation`` with
@@ -254,9 +257,6 @@ class LocalCheckpointCycler:
         self._trusted = True
         self._last_trusted: Optional[Dict] = None
 
-    def _persistent_ids(self) -> set:
-        return {int(k) for k in self._jsc.getPersistentRDDs().keySet().toArray()}
-
     def _free(self, ids: set) -> None:
         jmap = self._jsc.getPersistentRDDs()
         for rid in ids:
@@ -267,9 +267,8 @@ class LocalCheckpointCycler:
     def checkpoint(self, df: DataFrame) -> DataFrame:
         """Eagerly localCheckpoint ``df``, then free the generation that
         fell out of the ``lag`` window."""
-        before = self._persistent_ids()
         ck = df.localCheckpoint(eager=True)
-        self._live.append(self._persistent_ids() - before)
+        self._live.append({ck._jdf.logicalPlan().rdd().id()})
         if len(self._live) > self._lag:
             self._free(self._live.pop(0))
         return ck
@@ -321,6 +320,104 @@ class LocalCheckpointCycler:
         for gen in self._live[:-1]:
             self._free(gen)
         del self._live[:-1]
+
+
+def _estimated_partitions(df: DataFrame) -> Optional[int]:
+    """``ceil(estimated bytes / advisory partition size)`` for ``df``,
+    from its optimized plan's size statistic, read on the driver with
+    no job; ``None`` when the plan is out of reach (e.g. a Spark
+    Connect frame).  A plan whose size is unknown reports
+    ``Long.MaxValue`` bytes, which the caller's cap absorbs."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        spark = df.sparkSession
+        jvm = spark.sparkContext._jvm
+        target = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+    except Exception:
+        # the estimate only narrows the width: whatever keeps it from
+        # being read, the loop runs at the session width as before
+        return None
+    return -(-size // max(1, int(target)))
+
+
+class LoopSession:
+    """Where an iterative loop runs its jobs: the caller's session, or a
+    clone of it that differs only in ``spark.sql.shuffle.partitions``,
+    sized from the loop's input.
+
+    The width is ``ceil(estimated input bytes /
+    spark.sql.adaptive.advisoryPartitionSizeInBytes)``, clamped to
+    ``[1, session_shuffle_partitions(spark)]`` and computed once from
+    the input's optimized-plan statistics (no job).  Below the cap the
+    loop runs in a clone whose conf holds that width: everything the
+    loop builds from :meth:`adopt`-ed frames is planned there — its
+    caches (e.g. the edge list's ``repartition(key)``), its per-round
+    aggregates and its ``localCheckpoint`` generations share the one
+    width, so a join between the edge cache and an aggregate's output
+    needs no exchange on either side.  The adopted input's own lazy
+    upstream is planned there too, when the loop first reads it.
+    Sizing matters because AQE coalesces neither a cached plan's nor a
+    checkpoint's partitions: KB-sized loop state at the session width
+    pays one task per near-empty partition in every stage that reads
+    it, every round.
+
+    The caller's session is never modified, so loops running at once on
+    several driver threads, and other queries on the caller's session,
+    each keep their own width.  The clone shares the SparkContext and
+    the cache manager, and starts from a copy of the caller's conf,
+    temp views and functions.  :meth:`export` hands a result back in
+    the caller's session, where its remaining lazy plan runs at the
+    caller's width.  An input at or above the cap, a plan whose size
+    cannot be read and a session that cannot be cloned (e.g. Spark
+    Connect) leave the loop in the caller's session, unchanged.
+    """
+
+    def __init__(self, df: DataFrame) -> None:
+        self._home = self._loop = df.sparkSession
+        cap = session_shuffle_partitions(self._home)
+        est = _estimated_partitions(df)
+        self.width = cap if est is None else max(1, min(cap, est))
+        if self.width < cap:
+            try:
+                self._loop, self._dataset = _clone_session(self._home, self.width)
+            except Exception:
+                # sizing only narrows the width: without a clone the loop
+                # runs in the caller's session at its width, as before
+                self.width = cap
+
+    def _rebase(self, df: DataFrame, spark: SparkSession) -> DataFrame:
+        if self._loop is self._home:
+            return df
+        jdf = self._dataset.ofRows(spark._jsparkSession, df._jdf.logicalPlan())
+        return DataFrame(jdf, spark)
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        """``df`` as a frame of the loop's session."""
+        return self._rebase(df, self._loop)
+
+    def export(self, df: DataFrame) -> DataFrame:
+        """``df`` (built in the loop's session) as a frame of the caller's."""
+        return self._rebase(df, self._home)
+
+
+def _clone_session(spark: SparkSession, width: int):
+    """``(clone of spark at shuffle width, JVM Dataset class)``; raises
+    where the session cannot be cloned."""
+    from py4j.java_gateway import JavaClass
+
+    jvm = spark.sparkContext._jvm
+    # Spark 4 moved the JVM Dataset to the classic package
+    for name in ("org.apache.spark.sql.classic.Dataset", "org.apache.spark.sql.Dataset"):
+        dataset = getattr(jvm, name)
+        if isinstance(dataset, JavaClass):
+            break
+    else:
+        raise RuntimeError("no JVM Dataset class")
+    jclone = spark._jsparkSession.cloneSession()
+    jclone.conf().set("spark.sql.shuffle.partitions", str(width))
+    return SparkSession(spark.sparkContext, jclone), dataset
 
 
 _NUMERIC_RANK = {

@@ -1298,3 +1298,242 @@ def test_weighted_sample_large_k_forwards_unpersist_handle(spark, monkeypatch):
     assert cached_ids() - before  # the spillable path cached the sort
     h(blocking=True)
     assert cached_ids() <= before
+
+
+class TestLoopWidth:
+    # The iterative loops size spark.sql.shuffle.partitions from their
+    # input's plan statistics (utils.loop_shuffle_partitions) instead of
+    # running KB-sized state at the session width.  Inputs are written
+    # as one parquet file each: a scan's size statistic is its file
+    # size, and one file scans as one task.
+    SHUFFLE = "spark.sql.shuffle.partitions"
+    ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+    @pytest.fixture
+    def graphs(self, spark, tmp_path):
+        # 20 five-node stars (the near-duplicate shape); an 8-clique
+        # with a 12-node tail, which the 3-core peels one node per pass
+        pairs = [(s * 5, s * 5 + j) for s in range(20) for j in range(1, 5)]
+        edges = [(a, b) for a in range(8) for b in range(a + 1, 8)]
+        edges += [(i, i + 1) for i in range(7, 19)] + [(3, 30), (30, 31), (5, 31)]
+        paths = {"pairs": str(tmp_path / "pairs"), "edges": str(tmp_path / "edges")}
+        spark.createDataFrame(pairs, "id_a long, id_b long").coalesce(1).write.parquet(paths["pairs"])
+        spark.createDataFrame(edges, "src long, dst long").coalesce(1).write.parquet(paths["edges"])
+        return {k: spark.read.parquet(v) for k, v in paths.items()}
+
+    @pytest.fixture
+    def session_width_32(self, spark):
+        # a session sized for its largest shuffle, not for loop state
+        prev = spark.conf.get(self.SHUFFLE)
+        spark.conf.set(self.SHUFFLE, "32")
+        yield
+        spark.conf.set(self.SHUFFLE, prev)
+
+    @staticmethod
+    def _loops(graphs):
+        from spark_extension_spark.operators.dedup import connected_components, near_dup_clusters
+        from spark_extension_spark.operators.graph import k_core, pagerank
+
+        pairs, edges = graphs["pairs"], graphs["edges"]
+        return {
+            "near_dup_clusters": lambda h: near_dup_clusters(pairs, unpersist_handle=h),
+            "cc_star": lambda h: connected_components(pairs, algorithm="star", unpersist_handle=h),
+            "pagerank": lambda h: pagerank(edges, iterations=4, unpersist_handle=h),
+            "k_core": lambda h: k_core(edges, k=3, rounds=4, unpersist_handle=h),
+        }
+
+    def _run_loops(self, graphs):
+        # every call releases its caches through a handle: a later call
+        # would otherwise reuse a cache built at an earlier call's width
+        from spark_extension_spark.utils import UnpersistHandle
+
+        got = {}
+        for name, call in self._loops(graphs).items():
+            h = UnpersistHandle()
+            got[name] = sorted(map(tuple, call(h).collect()))
+            h(blocking=True)
+        return got
+
+    def test_tiny_loops_run_single_task_stages(self, spark, graphs, session_width_32):
+        # regression pin: at 32 shuffle partitions the in-build jobs of
+        # each loop over a tiny graph run one task per stage.  Before
+        # sizing, every cache and checkpoint of these loops ran at 32.
+        from spark_extension_spark.utils import UnpersistHandle
+
+        sc = spark.sparkContext
+        loops = self._loops(graphs)
+        for name in ("near_dup_clusters", "pagerank", "k_core"):
+            group = f"loop-width-{name}"
+            h = UnpersistHandle()
+            sc.setJobGroup(group, name)
+            try:
+                out = loops[name](h)
+            finally:
+                sc._jsc.clearJobGroup()
+            assert out.count() > 0
+            h(blocking=True)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            tracker = sc.statusTracker()
+            jobs = tracker.getJobIdsForGroup(group)
+            assert jobs, f"{name}: no in-build job recorded"
+            # a skipped stage (its output reused from an earlier job) can
+            # be evicted from the status store first; it ran no task here
+            stages = {
+                sid: tracker.getStageInfo(sid)
+                for job in jobs
+                for sid in tracker.getJobInfo(job).stageIds
+            }
+            tasks = {sid: info.numTasks for sid, info in stages.items() if info is not None}
+            assert tasks and max(tasks.values()) <= 1, f"{name}: stage task counts {tasks}"
+
+    def test_width_grows_with_input_and_results_identical(
+        self, spark, graphs, session_width_32, monkeypatch
+    ):
+        # A small advisory partition size makes the same inputs size to
+        # several partitions: the checkpointed state must then be that
+        # wide (bounded by the session's 32), and every result must be
+        # bit-identical to the one-partition run.  AQE coalescing is
+        # off so the checkpoints show the loop width itself, not AQE's
+        # merge of KB-sized partitions.
+        from spark_extension_spark.utils import LocalCheckpointCycler
+
+        widths = []
+        real_checkpoint = LocalCheckpointCycler.checkpoint
+
+        def recorded(self, df):
+            ck = real_checkpoint(self, df)
+            widths.append(ck.rdd.getNumPartitions())
+            return ck
+
+        monkeypatch.setattr(LocalCheckpointCycler, "checkpoint", recorded)
+        prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        try:
+            narrow = self._run_loops(graphs)
+            assert widths and set(widths) == {1}
+            del widths[:]
+            spark.conf.set(self.ADVISORY, "256b")
+            try:
+                wide = self._run_loops(graphs)
+            finally:
+                spark.conf.unset(self.ADVISORY)
+        finally:
+            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
+        assert widths and all(1 < w <= 32 for w in widths), widths
+        assert wide == narrow
+
+    def test_caller_session_width_untouched(self, spark, graphs, session_width_32, monkeypatch):
+        # the loop width lives in a clone of the session: the caller's
+        # conf reads the same inside every loop, after a normal return,
+        # and after a loop raises
+        from spark_extension_spark.operators.dedup import connected_components
+        from spark_extension_spark.utils import LocalCheckpointCycler
+
+        key, seen = self.SHUFFLE, []
+        real_checkpoint = LocalCheckpointCycler.checkpoint
+
+        def recorded(cycler, df):
+            seen.append(spark.conf.get(key, None))
+            return real_checkpoint(cycler, df)
+
+        monkeypatch.setattr(LocalCheckpointCycler, "checkpoint", recorded)
+        self._run_loops(graphs)
+        assert seen and set(seen) == {"32"}
+        assert spark.conf.get(self.SHUFFLE) == "32"
+        # a chain cannot converge in one label step: the loop raises
+        chain = graphs["edges"].where(F.col("src") >= 7)
+        with pytest.raises(RuntimeError):
+            connected_components(chain, "src", "dst", max_iterations=1, check_every=1)
+        assert spark.conf.get(self.SHUFFLE) == "32"
+        # a session that never set the key leaves it unset
+        spark.conf.unset(self.SHUFFLE)
+        del seen[:]
+        self._run_loops(graphs)
+        assert seen and set(seen) == {None}
+        assert spark.conf.get(self.SHUFFLE, None) is None
+
+    def test_concurrent_loops(self, spark, graphs, session_width_32):
+        # loops on two driver threads at once: each keeps its own width
+        # and its own checkpoints, the results match a lone run, and the
+        # session's width is the same afterwards
+        import threading
+
+        from spark_extension_spark.utils import UnpersistHandle
+
+        want = self._run_loops(graphs)
+        loops = self._loops(graphs)
+        start = threading.Barrier(2)
+        got, errors = {}, []
+
+        def run(names):
+            try:
+                start.wait()
+                for _ in range(2):
+                    for name in names:
+                        h = UnpersistHandle()
+                        got.setdefault(name, []).append(sorted(map(tuple, loops[name](h).collect())))
+                        h(blocking=True)
+            except Exception as e:  # surfaced below, with the thread's traceback
+                errors.append(e)
+
+        threads = [
+            threading.Thread(target=run, args=(names,))
+            for names in (("near_dup_clusters", "pagerank"), ("cc_star", "k_core"))
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        assert got == {name: [rows, rows] for name, rows in want.items()}
+        assert spark.conf.get(self.SHUFFLE) == "32"
+
+    def test_non_integer_session_width(self, monkeypatch):
+        # platforms can hold a non-integer value such as "auto", which
+        # OSS Spark refuses in conf.set, so the session is a stub; the
+        # cap then comes from session_shuffle_partitions' fallback, and
+        # the caller's conf keeps its value
+        from spark_extension_spark import utils
+
+        key = self.SHUFFLE
+
+        class _Conf:
+            def __init__(self, value):
+                self.values = {key: value}
+
+            def get(self, key, default=None):
+                return self.values.get(key, default)
+
+        class _Spark:
+            def __init__(self, value):
+                self.conf = _Conf(value)
+
+            class sparkContext:
+                defaultParallelism = 7
+
+        home = _Spark("auto")
+
+        class _Frame:
+            sparkSession = home
+
+        clones = []
+
+        def clone(spark, width):
+            clones.append(width)
+            return _Spark(str(width)), None
+
+        monkeypatch.setattr(utils, "_clone_session", clone)
+        monkeypatch.setattr(utils, "_estimated_partitions", lambda df: 1)
+        assert utils.LoopSession(_Frame()).width == 1
+        assert clones == [1] and home.conf.get(self.SHUFFLE) == "auto"
+        # an input at least as big as the fallback cap stays in the
+        # caller's session: no clone, frames pass through unchanged
+        monkeypatch.setattr(utils, "_estimated_partitions", lambda df: 50)
+        loop = utils.LoopSession(_Frame())
+        frame = _Frame()
+        assert loop.width == 7 and clones == [1]
+        assert loop.adopt(frame) is frame and loop.export(frame) is frame
+        # a session that cannot be cloned runs the loop at its own width
+        monkeypatch.setattr(utils, "_estimated_partitions", lambda df: 1)
+        monkeypatch.setattr(utils, "_clone_session", lambda spark, width: 1 / 0)
+        assert utils.LoopSession(_Frame()).width == 7
